@@ -31,98 +31,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return q.QUERIES["flagship_report"](spark, SMOKE_SF_DIR)
 
 
-def _driver_recorded() -> set[str]:
-    """Names already green in some CORRECTNESS_r*.json driver snapshot.
-
-    The driver records a fixed-size prefix of queries() per round, so we
-    order never-recorded (or previously-failed) queries first: over
-    successive rounds the recorded set converges to the full registry.
-    """
-    import glob
-    import json
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, bool] = {}
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            # latest round's record wins: a query green in r1 but failed in
-            # r2 needs re-recording, so it must sort back into the window.
-            # Oracle-backed names count as green ONLY on hash_match — a
-            # rows_match-only row (e.g. the r4 dtype failures) must sort
-            # back into the window for re-recording (VERDICT r4 wrong #3).
-            # A rows-only record counts as green only while the query still
-            # has no oracle — once one is added (e.g. the approx twins),
-            # the query needs a fresh hash-matched row.
-            if name in q.ORACLES:
-                latest[name] = row.get("hash_match") is True
-            else:
-                latest[name] = row.get("rows_match") is True or (
-                    row.get("err") == "no_oracle"
-                    and row.get("spark_rows") is not None
-                )
-    return {n for n, ok in latest.items() if ok}
-
-
-# Driver window-convergence priority (VERDICT r3 item 2): the window is a
-# fixed 50-query prefix; after round 7, 79/315 registry queries have never
-# been recorded (relational_ext 71 + timeseries 8) — VERDICT r7 item 1.
-# The module ranking makes the r8 window the 8 timeseries rows (including
-# join_point_in_time, whose oracle was rewritten as an ASOF JOIN this
-# round — recording it now puts a driver check on the new oracle one round
-# earlier) followed by relational_ext's first 42; the remaining 29
-# relational_ext rows are round 9's window, completing 315/315
-# driver-recorded coverage. The full r8 window was pre-verified at sf0.01
-# and at 100x volume (GATE100X_WIN_r08.txt) before the driver ran it.
-
-# Names that must land at the very front of THIS round's window regardless
-# of module rank (e.g. queries whose latest driver record went red and need
-# re-recording before new coverage). Empty for r8: all 50 round-7 targets
-# landed green, and no query regressed.
-_RECORD_FIRST: list[str] = []
-
-_MODULE_PRIORITY = [
-    "warehouse",
-    "tpch_ext",
-    "streams",
-    "timeseries",
-    "relational_ext",
-    "training",
-    "analytics_ext",
-    "core",
-    "quality",
-]
-
-
-def _module_rank(fn: Callable) -> int:
-    mod = getattr(fn, "__module__", "").rsplit(".", 1)[-1]
-    try:
-        return _MODULE_PRIORITY.index(mod)
-    except ValueError:
-        return len(_MODULE_PRIORITY)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    allq = dict(q.QUERIES)
-    green = _driver_recorded()
-    names = list(allq)
-    unrecorded = [n for n in names if n not in green]
-    # stable sort: explicit front-of-window names, then module priority,
-    # registration order within module
-    unrecorded.sort(
-        key=lambda n: (
-            _RECORD_FIRST.index(n) if n in _RECORD_FIRST else len(_RECORD_FIRST),
-            _module_rank(allq[n]),
-        )
-    )
-    ordered = unrecorded + [n for n in names if n in green]
-    return {n: allq[n] for n in ordered}
+    """Every registered query, in registration order."""
+    return dict(q.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -184,18 +184,19 @@ def _timed_passes(qs, spark, sf_dir) -> tuple[dict[str, float], float]:
         for name in tier:
             walls = []
             for _ in range(passes):
-                # Measurement-integrity fix (r13, VERDICT r12 item 1):
-                # Spark's CacheManager keys cached data by LOGICAL PLAN,
-                # so any .cache() inside a query (the keep/best/signature
-                # caches, cache_vectors bases) materialized during the
-                # warm-up or an earlier pass serves every later pass from
-                # memory — min-of-passes then times cache READS, not an
-                # execution. Clearing before each timed pass makes every
-                # pass compute from the parquet inputs; the warm-up pass
+                # Measurement guard: Spark's CacheManager keys cached
+                # data by LOGICAL PLAN, so a frame a query shares
+                # (demo_data_warehouse_spark/reuse.py) and that the
+                # warm-up or an earlier pass materialized would serve
+                # the next pass from memory — min-of-passes would then
+                # time cache READS, not an execution. The @query
+                # wrapper's release() already drops the previous
+                # query's shared frames on entry (pinned by
+                # tests/unit/test_reuse.py); clearing here as well keeps
+                # every timed pass computing from the parquet inputs
+                # whatever else the session cached. The warm-up pass
                 # (JIT, page cache, plan compile — per-process one-time
-                # costs, not per-query costs) stays. Old-methodology
-                # numbers are kept in BENCH_LOCAL_r13_pre.json and the
-                # paired same-code run is recorded in OPTIMIZATION_r13.md.
+                # costs, not per-query costs) stays.
                 spark.catalog.clearCache()
                 t0 = time.time()
                 _run(qs, name, spark, sf_dir)

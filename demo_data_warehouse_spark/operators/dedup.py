@@ -22,6 +22,8 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..reuse import share
+
 _log = logging.getLogger(__name__)
 
 
@@ -148,38 +150,11 @@ def minhash_signatures(
     return sh.select(F.col(id_col).alias("id"), F.array(*mins).alias("sig"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k_shingle: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    seed: int = 42,
-    hash_mode: str = "fast",
-    cache_signatures: bool = False,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-duplicate candidate pairs via banded minhash LSH.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b and
-    est_jaccard >= threshold (estimated as matching-signature fraction).
-    Shuffle profile: one groupless equi-join on (band_id, band_hash)
-    buckets + one join back to signatures — no cross product.
-
-    cache_signatures persists the (id, sig) table, reused three times
-    (band explode + both join-back sides) — caller-controlled because at
-    100 TB an implicit full materialization must be an explicit opt-in.
-    max_bucket_size drops degenerate hot buckets (see _cap_hot_buckets);
-    enable cache_signatures alongside it to avoid re-deriving signatures
-    for the bucket census.
-    """
+def _minhash_bands(sigs: DataFrame, num_hashes: int, bands: int, hash_mode: str) -> DataFrame:
+    """(id, band_id, band_hash): one row per signature band — the LSH
+    bucket keys shared by the self-join and the cross-table join."""
     assert num_hashes % bands == 0
     rows = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, k_shingle, num_hashes, seed, hash_mode)
-    if cache_signatures:
-        sigs = sigs.cache()
 
     def band_hash(j: int):
         if hash_mode == "portable":
@@ -196,9 +171,39 @@ def minhash_lsh_pairs(
             for j in range(bands)
         ]
     )
-    exploded = sigs.select("id", F.explode(band_structs).alias("b")).select(
+    return sigs.select("id", F.explode(band_structs).alias("b")).select(
         "id", F.col("b.band_id").alias("band_id"), F.col("b.band_hash").alias("band_hash")
     )
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k_shingle: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.5,
+    seed: int = 42,
+    hash_mode: str = "fast",
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Near-duplicate candidate pairs via banded minhash LSH.
+
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b and
+    est_jaccard >= threshold (estimated as matching-signature fraction).
+    Shuffle profile: one groupless equi-join on (band_id, band_hash)
+    buckets + one join back to signatures — no cross product.
+
+    The (id, sig) table has three consumers (band explode + both
+    join-back sides, plus the bucket census under max_bucket_size), so
+    it is shared for the query's lifetime (reuse.py).
+    max_bucket_size drops degenerate hot buckets (see _cap_hot_buckets).
+    """
+    sigs = share(
+        minhash_signatures(df, id_col, text_col, k_shingle, num_hashes, seed, hash_mode)
+    )
+    exploded = _minhash_bands(sigs, num_hashes, bands, hash_mode)
     if max_bucket_size is not None:
         exploded = _cap_hot_buckets(
             exploded, ["band_id", "band_hash"], max_bucket_size, "minhash_lsh_pairs"
@@ -295,7 +300,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     hash_mode: str = "fast",
-    cache_signatures: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by simhash hamming distance ≤ max_hamming.
@@ -304,14 +308,13 @@ def simhash_pairs(
     bits) and bucket-join on any equal block (pigeonhole: hamming ≤ 3 ⇒
     at least one of 4 blocks identical) — never a cross product.
 
-    cache_signatures / max_bucket_size: see minhash_lsh_pairs — same
-    caller-controlled materialization and degenerate-bucket guard.
+    The signatures are shared for the query's lifetime (reuse.py);
+    max_bucket_size: see minhash_lsh_pairs — same degenerate-bucket
+    guard.
     """
     bb = simhash_bits(hash_mode) // 4
     mask = (1 << bb) - 1
-    sigs = simhash_signatures(df, id_col, text_col, hash_mode)
-    if cache_signatures:
-        sigs = sigs.cache()
+    sigs = share(simhash_signatures(df, id_col, text_col, hash_mode))
     blocks = sigs.select(
         "id",
         "simhash",
@@ -531,18 +534,15 @@ def embed_cosine_pairs_lsh(
     max_bucket_size: int | None = None,
     ref_n: int = 2000,
     max_extra_bits: int = 8,
-    cache_vectors: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs at scale: banded random-hyperplane LSH.
 
-    cache_vectors lazily caches the (id, vector, band-buckets) base —
-    reused by FOUR consumers (both sides of the bucket self-join, both
-    vector attachments of the exact verify), which otherwise each
-    re-run the scan + Arrow sign-projection pass (measured r12: the
-    sf0.1 pair pipeline spent ~3 s on 2,000 vectors, almost all
-    repeated stage/Python setup). Caller-controlled like
-    minhash_lsh_pairs' cache_signatures: at 100 TB an implicit full
-    vector materialization must be an explicit opt-in.
+    The (id, vector, band-buckets) base has FOUR consumers (both sides
+    of the bucket self-join, both vector attachments of the exact
+    verify), which otherwise each re-run the scan + Arrow
+    sign-projection pass (measured r12: the sf0.1 pair pipeline spent
+    ~3 s on 2,000 vectors, almost all repeated stage/Python setup), so
+    it is shared for the query's lifetime (reuse.py).
 
     Each band is r sign bits; ids sharing any band bucket become
     candidates (equi-join on (band, bucket) — never a cross product),
@@ -630,21 +630,19 @@ def embed_cosine_pairs_lsh(
             )
         return pd.Series(full, dtype=object)
 
-    # ONE base carrying the vector AND its band buckets: the sign
-    # projection (an Arrow pass) runs once here instead of once per
-    # consumer, and cache_vectors makes the base's scan shareable too.
+    # ONE shared base carrying the vector AND its band buckets: the
+    # sign projection (an Arrow pass) and the scan run once, at cache
+    # build, instead of once per consumer.
     e = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
         # asNondeterministic (guide §4.4, same class as cosine_batch):
         # the exploded branch filters on the projected bucket array
-        # (isnotnull/size>0 guards), and on the UNCACHED path — the
-        # documented 100 TB default, where materialization is the
-        # caller's choice — the pushed guard makes the optimizer
-        # evaluate the full sign-projection UDF twice per consumer.
-        # The cached callers are unaffected (the cache computes once).
+        # (isnotnull/size>0 guards), and whenever the base runs
+        # uncached (a frame executed after its query's scope was
+        # released) the pushed guard would make the optimizer evaluate
+        # the full sign-projection UDF twice per consumer.
     ).withColumn("__bkts", _buckets.asNondeterministic()(F.col("v")))
-    if cache_vectors:
-        e = e.cache()
+    e = share(e)
     exploded = e.select(
         "id", F.posexplode("__bkts").alias("band_id", "bucket")
     )
@@ -715,7 +713,6 @@ def setsim_join_prefix(
     token_col: str,
     tau_num: int,
     tau_den: int,
-    cache_tokens: bool = False,
 ) -> DataFrame:
     """Exact all-pairs set-similarity join with PREFIX FILTERING (the
     ppjoin/AllPairs family, Bayardo et al. WWW'07): every document pair
@@ -770,23 +767,15 @@ def setsim_join_prefix(
     `tokens`: (id, token) pairs, pre-deduplicated per document (set
     semantics). Returns (id_a, id_b, inter, union_sz) with id_a < id_b.
 
-    cache_tokens lazily caches the (id, token) frame — it has FOUR
-    consumers (doc sizes, vocabulary frequency, the ranked prefix
-    derivation, and the verify-side doc arrays), which otherwise each
-    re-run the caller's tokenization plan (for the shingle callers
-    that is a corpus explode + array_distinct per consumer — 4 full
-    corpus passes at 100 TB). Caller-controlled like
-    minhash_lsh_pairs' cache_signatures / embed_cosine_pairs_lsh's
-    cache_vectors: an implicit corpus-wide materialization must be the
-    caller's explicit choice, never the operator's. The cache lives
-    for the session (Spark unpersists on GC via the ContextCleaner);
-    harnesses running many queries clear between queries.
+    `tokens` has FOUR consumers (doc sizes, vocabulary frequency, the
+    ranked prefix derivation, the verify-side doc arrays), each of
+    which re-runs the caller's tokenization plan. The operator does not
+    share it; a caller whose tokenization is expensive passes
+    `reuse.share(tokens)` to run it once per query.
     """
     from pyspark.sql import Window
 
     tok = tokens.select(F.col(id_col).alias("id"), F.col(token_col).alias("token"))
-    if cache_tokens:
-        tok = tok.cache()
     sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
     freq = tok.groupBy("token").agg(F.count("*").alias("tf"))
     # global total order: rarest first, token string as the tiebreak
@@ -901,31 +890,10 @@ def minhash_lsh_join(
     are per-row, so each side can be computed (and at 100 TB,
     pre-materialized) independently with the same seeded coefficients.
     """
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
 
     def bandize(df: DataFrame):
         sigs = minhash_signatures(df, id_col, text_col, k_shingle, num_hashes, seed, hash_mode)
-
-        def band_hash(j: int):
-            if hash_mode == "portable":
-                sl = (
-                    f"concat_ws(',', transform(slice(sig, {j * rows + 1}, {rows}),"
-                    " v -> cast(v as string)))"
-                )
-                return F.expr(hash60_sql(sl))
-            return F.xxhash64(F.expr(f"slice(sig, {j * rows + 1}, {rows})"))
-
-        band_structs = F.array(
-            *[
-                F.struct(F.lit(j).alias("band_id"), band_hash(j).alias("band_hash"))
-                for j in range(bands)
-            ]
-        )
-        ex = sigs.select("id", F.explode(band_structs).alias("b")).select(
-            "id", F.col("b.band_id").alias("band_id"), F.col("b.band_hash").alias("band_hash")
-        )
-        return sigs, ex
+        return sigs, _minhash_bands(sigs, num_hashes, bands, hash_mode)
 
     sigs_l, ex_l = bandize(left)
     sigs_r, ex_r = bandize(right)

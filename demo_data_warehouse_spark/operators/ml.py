@@ -255,7 +255,7 @@ def dbscan_lsh(
 
     pairs = dedup_ops.embed_cosine_pairs_lsh(
         df, id_col, vec_col, threshold=threshold, dim=dim,
-        bands=bands, rows_per_band=rows_per_band, cache_vectors=True,
+        bands=bands, rows_per_band=rows_per_band,
     )
     # eager on purpose: sym's blocks feed THREE consumers (degree
     # census, core-edge join, border join) that can run concurrently in

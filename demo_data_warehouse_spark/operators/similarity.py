@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..reuse import share
+
 
 def _dot(a, b):  # sequential fold in doubles — deterministic
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -545,16 +547,15 @@ def semantic_dup_flags(
     higher id of each qualifying pair, so keeping `is_dup = false`
     retains exactly the lowest id per duplicate chain within a cell.
     """
-    # lazily cached (the curate_mix `keep`/`best` discipline — inside
-    # the timed computation, nothing persists across runs): assign has
-    # THREE consumers (the left and right sides of the cell self-join
-    # and the final flag join), and without the cache each re-runs the
+    # shared for the query's lifetime (reuse.py): assign has THREE
+    # consumers (the left and right sides of the cell self-join and the
+    # final flag join), and without the cache each re-runs the
     # whole-corpus centroid-scoring UDF — 3 corpus passes at 100 TB for
     # a frame that is two narrow columns (id, cell). The vector
-    # attachment (`vecs`) stays uncached on purpose: materializing the
-    # corpus vectors implicitly is the caller's choice, never the
-    # operator's (the finding-6 rule).
-    assign = ivf_assign(df, id_col, vec_col, centroids).cache()
+    # attachment (`vecs`) stays unshared: it is a plain scan projection,
+    # cheap to re-read, and caching it would materialize the corpus
+    # vectors.
+    assign = share(ivf_assign(df, id_col, vec_col, centroids))
     vecs = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     tagged = assign.join(vecs, "id")
     left = tagged.select(F.col("id").alias("id_a"), "cell", F.col("v").alias("va"))

@@ -21,6 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..reuse import release
 from ..session import tune
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -28,11 +29,15 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a driver query; oracle=None → rows-only check."""
+    """Register a driver query; oracle=None → rows-only check.
+
+    The wrapper releases the previous query's shared frames (reuse.py)
+    and re-tunes the session before building this query's frame."""
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release()
             tune(spark)
             return fn(spark, sf_dir)
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..operators import dedup, graph, multimodal, sampling, similarity, text
 from ..operators.dedup import _MERSENNE_P, minhash_coeffs
+from ..reuse import share
 from . import query
 
 # ---------------------------------------------------------------------------
@@ -99,8 +100,7 @@ def dedup_minhash(spark, sf_dir):
     tests/unit/test_dedup.py."""
     docs = table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.3, hash_mode="portable",
-        cache_signatures=True,
+        docs, "doc_id", "text", threshold=0.3, hash_mode="portable"
     )
 
 
@@ -124,8 +124,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     candidates and exact verify both oracle-replayed)."""
     docs = table(spark, sf_dir, "documents")
     cands = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.2, hash_mode="portable",
-        cache_signatures=True,
+        docs, "doc_id", "text", threshold=0.2, hash_mode="portable"
     ).select("id_a", "id_b")
     return dedup.ngram_jaccard_pairs(docs, cands, "doc_id", "text")
 
@@ -164,8 +163,7 @@ def dedup_simhash(spark, sf_dir):
     fine at oracle scale, the Spark side stays bucket-joined)."""
     docs = table(spark, sf_dir, "documents")
     return dedup.simhash_pairs(
-        docs, "doc_id", "text", max_hamming=10, hash_mode="portable",
-        cache_signatures=True,
+        docs, "doc_id", "text", max_hamming=10, hash_mode="portable"
     )
 
 
@@ -299,8 +297,7 @@ def dedup_embed_lsh(spark, sf_dir):
     asserted in tests/unit/test_dedup.py)."""
     emb = table(spark, sf_dir, "embeddings")
     return dedup.embed_cosine_pairs_lsh(
-        emb, "vec_id", "embedding", threshold=0.35, dim=64, bands=8, rows_per_band=4,
-        cache_vectors=True,
+        emb, "vec_id", "embedding", threshold=0.35, dim=64, bands=8, rows_per_band=4
     )
 
 
@@ -350,8 +347,7 @@ _DUCK_MINHASH_EDGES = f"""{_duck_minhash_ctes()},
 def _minhash_edges(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.3, hash_mode="portable",
-        cache_signatures=True,
+        docs, "doc_id", "text", threshold=0.3, hash_mode="portable"
     )
     return docs, pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
 
@@ -3199,16 +3195,16 @@ def corpus_curate_mix(spark, sf_dir):
     ).where(F.col("n_tokens").between(20, 200))
     rn = F.row_number().over(Window.partitionBy("text").orderBy("doc_id"))
     keep = q.withColumn("rn", rn).where(F.col("rn") == 1).drop("rn")
-    # lazily CACHED (not localCheckpoint): keep has three consumers
-    # (signatures, component nodes, keep-best join). localCheckpoint was
-    # measured SLOWER at sf0.1 (2.9s -> 4.0s warm — eager materialization
-    # + lineage cut cost more than recompute), but a lazy .cache() wins
-    # ~0.2s median over 5-rep interleaved A/B (3.48 -> 3.26, 3.19 -> 3.07)
-    # by reusing the scan+filter+window subtree without an extra job.
-    keep = keep.cache()
+    # shared lazily (reuse.py), not localCheckpoint: keep has three
+    # consumers (signatures, component nodes, keep-best join).
+    # localCheckpoint was measured SLOWER at sf0.1 (2.9s -> 4.0s warm —
+    # eager materialization + lineage cut cost more than recompute), but
+    # a lazy cache wins ~0.2s median over 5-rep interleaved A/B (3.48 ->
+    # 3.26, 3.19 -> 3.07) by reusing the scan+filter+window subtree
+    # without an extra job.
+    keep = share(keep)
     pairs = dedup.minhash_lsh_pairs(
-        keep, "doc_id", "text", threshold=0.3, hash_mode="portable",
-        cache_signatures=True,
+        keep, "doc_id", "text", threshold=0.3, hash_mode="portable"
     )
     comps = graph.connected_components(
         keep.select("doc_id"),
@@ -3223,13 +3219,13 @@ def corpus_curate_mix(spark, sf_dir):
         .where(F.col("brn") == 1)
         .select("doc_id", "lang", "n_tokens")
     )
-    # lazily cached like `keep` above: the r12 plan capture shows the
+    # shared like `keep` above: the r12 plan capture shows the
     # keep⋈comps keep-best subtree recomputed THREE times in the final
     # plan (census, targets, and the ranked selection each re-derive
     # it); caching collapses that to one compute + two in-memory reads
     # (guide §5 — reuse beats recompute when the subtree carries a
     # window + join).
-    best = best.cache()
+    best = share(best)
     mixed = sampling.temperature_sample(
         best, "doc_id", "lang", budget=150, inv_temperature_pow=0.5
     )
@@ -3320,8 +3316,9 @@ def text_inverted_index(spark, sf_dir):
     # (optimizeSkewsInRebalancePartitions, default on) — hot buckets
     # spread, file sizes stay bounded by the advisory knob, no local
     # constant. Mechanism pinned by tests/unit/test_optimization_r12.py
-    # (one file per bucket) and test_optimization_r13.py (hot-bucket
-    # spread).
+    # (one file per bucket) and test_optimization_r13.py (a hot
+    # partition value spreads over several files under the same
+    # REBALANCE-before-partitioned-write shape).
     postings.hint("rebalance", F.col("bucket")).write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(idx)

@@ -18,6 +18,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_shared_frames():
+    """Each test is one reuse scope, like one query: frames an operator
+    shared (demo_data_warehouse_spark/reuse.py) never outlive the test."""
+    yield
+    from demo_data_warehouse_spark.reuse import release
+
+    release()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

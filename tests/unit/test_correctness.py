@@ -45,6 +45,14 @@ def test_registry_fully_oracle_backed():
     )
 
 
+def test_queries_in_registration_order():
+    """queries() is the registry in its own registration order, with
+    nothing re-sorted in front of it."""
+    from demo_data_warehouse_spark import queries as q
+
+    assert list(QUERIES) == list(q.QUERIES)
+
+
 def test_dtype_strictness_catches_int_float_mismatch():
     # driver parity (VERDICT r4 wrong #1): DuckDB HUGEINT sums render as
     # float64 while Spark returns int64; the driver hash distinguishes

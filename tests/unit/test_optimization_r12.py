@@ -3,8 +3,9 @@
 Each test pins an optimization's *mechanism* (not just its result):
   1. connected_components materializes the caller's edge plan O(1)
      times, not once per propagation round (the r12 sym checkpoint).
-  2. embed_cosine_pairs_lsh returns identical pairs with and without
-     cache_vectors (the r12 single-base restructure is cache-neutral).
+  2. embed_cosine_pairs_lsh projects each vector into its band buckets
+     once: the shared (id, vector, buckets) base leaves no live bucket
+     UDF evaluation outside the cache build (the r12 single base).
   3. text_inverted_index's postings write emits exactly one file per
      occupied bucket (the r12 hash-distributed partitioned write).
 Results themselves stay pinned by the DuckDB oracle gate.
@@ -47,31 +48,6 @@ def test_cc_edge_plan_not_reexecuted_per_round(spark):
     # would put the counter at >= 11 * 2 * 11 = 242. The checkpointed
     # operator evaluates the plan a small constant number of times.
     assert calls.value <= 4 * (n - 1), calls.value
-
-
-def test_embed_lsh_cache_vectors_is_result_neutral(spark):
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(60)
-    ]
-    # plant near-dups: 3 clones of vector 0
-    for j in (60, 61, 62):
-        rows.append((j, [v + rng.gauss(0, 0.01) for v in rows[0][1]]))
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-    def run(**kw):
-        got = dedup.embed_cosine_pairs_lsh(
-            df, "vec_id", "embedding", threshold=0.5, dim=8,
-            bands=4, rows_per_band=4, **kw
-        ).collect()
-        return sorted((r["id_a"], r["id_b"], r["cos_sim"]) for r in got)
-
-    plain = run()
-    cached = run(cache_vectors=True)
-    assert plain == cached
-    assert any(a == 0 and b in (60, 61, 62) for a, b, _ in plain)
 
 
 def test_embed_cosine_pairs_multiblock_matches_numpy(spark):
@@ -289,7 +265,8 @@ def test_cosine_verify_not_duplicated_by_threshold_filter(spark):
     UDF gets duplicated around the pushed filter — two stacked
     ArrowEvalPython nodes scoring every candidate pair twice (the
     pre-fix executed plan). asNondeterministic pins ONE evaluation.
-    Uncached path on purpose: nothing may hide behind a cache."""
+    The verify sits above the shared vector base, so its cosine
+    evaluations are live: nothing hides behind a cache."""
     import random
 
     rng = random.Random(3)
@@ -341,3 +318,29 @@ def test_semantic_assign_scored_once_across_consumers(spark):
     assert nodes, "expected the assignment UDF in the plan"
     live = [line for cached, line in nodes if not cached]
     assert not live, nodes
+
+
+def test_embed_lsh_buckets_scored_once_across_consumers(spark):
+    """embed_cosine_pairs_lsh's (id, vector, buckets) base feeds four
+    consumers (both sides of the bucket self-join, both vector
+    attachments of the exact verify); sharing it (reuse.py) must leave
+    ZERO live _buckets evaluations in the final plan — every vector is
+    sign-projected exactly once, at cache build. The planted near-dups
+    are still found."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(60)]
+    # plant near-dups: 3 clones of vector 0
+    for j in (60, 61, 62):
+        rows.append((j, [v + rng.gauss(0, 0.01) for v in rows[0][1]]))
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    pairs = dedup.embed_cosine_pairs_lsh(
+        df, "vec_id", "embedding", threshold=0.5, dim=8, bands=4, rows_per_band=4
+    )
+    nodes = _py_eval_nodes(pairs, "_buckets(")
+    assert nodes, "expected the bucket UDF in the plan"
+    live = [line for cached, line in nodes if not cached]
+    assert not live, nodes
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert {(0, 60), (0, 61), (0, 62)} & got, got
