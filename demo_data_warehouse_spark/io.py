@@ -21,13 +21,42 @@ save_table_to_gbq (reference dags/utils/common/data_helper.py:48-106):
 
 Both stamp etl_inserted + partition_value at publish
 (reference dags/utils/etl.py:63-82).
+
+Under those two verbs sit one mechanism per publish concern:
+
+  directory swap      every whole-directory rewrite (compact,
+                      repartition_layout, MergeOnReadTable.apply_deletes,
+                      streaming/pipeline.py::rollup_merge_sink) writes a
+                      staging dir beside the target, then _swap_in runs
+                      two renames: final → final.old, staging → final,
+                      then drops final.old. Readers see the old or the
+                      new directory, never a torn one. A crash before
+                      the first rename leaves the target untouched (an
+                      orphan `_tmp-` staging dir, which no reader
+                      lists). Crash rule, applied by _heal before every
+                      read and rewrite: `.old` alone → the crash fell
+                      between the renames, restore it; `.old` next to
+                      final → the swap completed, drop it. Pinned by
+                      tests/unit/test_merge_partition_scoped.py (table,
+                      repartition_layout, rollup state) and
+                      test_incremental.py::test_merge_on_read_crash_recovery.
+  commit write        every manifest, sidecar, spec and pointer file is
+                      written by atomic_write: a unique same-directory
+                      dot-prefixed temp file, then os.replace. A crash
+                      leaves the previous file or the new one, never a
+                      truncated one; the temp is ignored by every reader.
+  file listing        parquet_files(root) is the one walk over a
+                      table's data files.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +65,49 @@ from pyspark.sql.types import StructType
 from .operators.merge import merge_upsert
 
 DATABASES = ("bronze", "silver", "gold")
+
+
+def parquet_files(root: str) -> list[str]:
+    """Every parquet data file under `root`, sorted (none if missing)."""
+    return sorted(
+        os.path.join(d, n)
+        for d, _sub, names in os.walk(root)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace `path` with `text` in one step (the module's commit write)."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def _swap_in(final: str, write: Callable[[str], None]) -> None:
+    """Publish a rewrite of `final`: `write(staging)` fills a staging dir
+    beside it, then the two-rename swap in the module docstring."""
+    staging = os.path.join(
+        os.path.dirname(final), f"_tmp-{os.path.basename(final)}-{uuid.uuid4().hex[:8]}"
+    )
+    write(staging)
+    old = final + ".old"
+    if os.path.isdir(final):
+        os.rename(final, old)
+    os.rename(staging, final)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _heal(final: str) -> None:
+    """Apply the swap's crash rule (module docstring) to `final`."""
+    old = final + ".old"
+    if not os.path.isdir(old):
+        return
+    if os.path.isdir(final):
+        shutil.rmtree(old, ignore_errors=True)
+    else:
+        os.rename(old, final)
 
 
 def zorder_key(dims: list[tuple], bits: int = 12):
@@ -74,30 +146,13 @@ class Warehouse:
         return os.path.join(self.root, db, table)
 
     def exists(self, db: str, table: str) -> bool:
-        self._recover(db, table)
+        # heal first: a half-swapped table would otherwise read as
+        # missing and read() would bootstrap it empty, losing history
         p = self.path(db, table)
+        _heal(p)
         return os.path.isdir(p) and any(
             not n.startswith((".", "_tmp")) for n in os.listdir(p)
         )
-
-    def _recover(self, db: str, table: str) -> None:
-        """Heal a half-finished staging+swap (compact crash window).
-
-        The swap is two renames: final → final.old, then staging →
-        final. A crash between them leaves only `<table>.old`; without
-        recovery the next read() would silently bootstrap an empty
-        table from the delta's schema and prior history would be lost.
-        Rules: .old alone → restore it; .old alongside final → the swap
-        completed, .old is post-swap debris → drop it.
-        """
-        final = self.path(db, table)
-        old = final + ".old"
-        if not os.path.isdir(old):
-            return
-        if os.path.isdir(final):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, final)
 
     def read(
         self,
@@ -281,9 +336,16 @@ class Warehouse:
         costs one partition's IO, not the table's; untouched partitions'
         files are never opened or moved.
 
-        The touched-partition list is collected at the driver — it is a
-        set of partition VALUES (dates), bounded by the table's partition
-        count, never row data.
+        The plan is one driver collect over target ⟕ broadcast(delta
+        keys) ∪ delta: per partition_value, `hit` (it holds a row whose
+        key the delta matches), `keep` (it holds a row the delta does
+        not match) and `new` (the delta writes into it). Touched = hit ∨
+        new. A touched partition with ¬keep ∧ ¬new ends up empty (all
+        its keys moved elsewhere); dynamic partition overwrite only
+        replaces partitions present in the output, so its stale dir is
+        removed explicitly. An empty delta touches nothing and writes
+        nothing. The collected rows are partition VALUES (dates),
+        bounded by the table's partition count, never row data.
         """
         if delta is None:
             return
@@ -298,45 +360,23 @@ class Warehouse:
         else:
             target = self.read(db, table, schema=schema or delta.schema)
         keys = list(keys)
-        # delta keys are small relative to the target (a micro-batch /
-        # daily increment) — broadcast so the target is never shuffled
-        delta_keys = F.broadcast(delta.select(*keys).distinct())
-        matched_parts = {
-            r[0]
-            for r in target.join(delta_keys, on=keys, how="left_semi")
-            .select("partition_value")
-            .distinct()
-            .collect()
-        }
-        delta_parts = {
-            r[0] for r in delta.select("partition_value").distinct().collect()
-        }
-        touched = matched_parts | delta_parts
-        scoped = target.where(_partition_in(touched))
+        plan = _merge_plan(target, delta, keys)
+        if not plan:
+            return
+        scoped = target.where(_partition_in(set(plan)))
         if evolve_schema:
             merged = merge_upsert(scoped, delta, keys, evolve_schema=True)
         else:
             merged = merge_upsert(
                 scoped.select(*delta.columns), delta.select(*delta.columns), keys
             )
-        # dynamic partition overwrite replaces exactly the partitions
-        # present in `merged` — but a touched partition can end up EMPTY
-        # (all its rows matched keys that moved elsewhere); those are not
-        # in the output, so their stale dirs are removed explicitly
-        survivor_parts = {
-            r[0]
-            for r in scoped.join(delta_keys, on=keys, how="left_anti")
-            .select("partition_value")
-            .distinct()
-            .collect()
-        }
         merged.write.mode("overwrite").partitionBy("partition_value").parquet(final)
-        for part in touched - (survivor_parts | delta_parts):
-            shutil.rmtree(
-                os.path.join(final, f"partition_value={_hive_part(part)}"),
-                ignore_errors=True,
-            )
-
+        for part, (keep, new) in plan.items():
+            if not (keep or new):
+                shutil.rmtree(
+                    os.path.join(final, f"partition_value={_hive_part(part)}"),
+                    ignore_errors=True,
+                )
 
     def compact(
         self,
@@ -350,10 +390,11 @@ class Warehouse:
         then pays per-file open cost and loses row-group locality).
 
         Rewrites each partition_value directory to
-        ceil(partition_bytes / target_file_bytes) files via a
-        staging+swap (atomic-commit stand-in; Delta/Iceberg OPTIMIZE
-        is the production analog). Data is byte-identical — only file
-        layout changes. Returns {'files_before': n, 'files_after': m}.
+        ceil(partition_bytes / target_file_bytes) files, published by
+        the module's directory swap (atomic-commit stand-in;
+        Delta/Iceberg OPTIMIZE is the production analog). Data is
+        byte-identical — only file layout changes. Returns
+        {'files_before': n, 'files_after': m}.
 
         Per-partition file counts come from the on-disk partition dir
         sizes; rows are spread across that many reducers with a
@@ -361,20 +402,10 @@ class Warehouse:
         partition larger than target_file_bytes splits into multiple
         target-size files instead of collapsing to one.
         """
-        self._recover(db, table)
         final = self.path(db, table)
-        files_before = sum(
-            1
-            for _dir, _sub, names in os.walk(final)
-            for n in names
-            if n.endswith(".parquet")
-        )
-        total_bytes = sum(
-            os.path.getsize(os.path.join(d, n))
-            for d, _sub, names in os.walk(final)
-            for n in names
-            if n.endswith(".parquet")
-        )
+        _heal(final)
+        files = parquet_files(final)
+        total_bytes = sum(os.path.getsize(p) for p in files)
         df = self.spark.read.parquet(final)
         partitioned = "partition_value" in df.columns
         n_files = max(1, -(-total_bytes // target_file_bytes))
@@ -385,12 +416,7 @@ class Warehouse:
                 d = os.path.join(final, name)
                 if not (name.startswith("partition_value=") and os.path.isdir(d)):
                     continue
-                b = sum(
-                    os.path.getsize(os.path.join(dd, n))
-                    for dd, _s, names in os.walk(d)
-                    for n in names
-                    if n.endswith(".parquet")
-                )
+                b = sum(os.path.getsize(p) for p in parquet_files(d))
                 part_bytes[name.split("=", 1)[1]] = b
             nf_rows = [
                 (v, max(1, -(-b // target_file_bytes))) for v, b in part_bytes.items()
@@ -415,30 +441,17 @@ class Warehouse:
             ).drop("_salt")
         else:
             out = df.repartition(int(n_files))
-        staging = os.path.join(self.root, db, f"_tmp-{table}-{uuid.uuid4().hex[:8]}")
         w = out.write.mode("overwrite")
         if partitioned:
             w = w.partitionBy("partition_value")
-        w.parquet(staging)
-        old = final + ".old"
-        os.rename(final, old)
-        os.rename(staging, final)
-        shutil.rmtree(old, ignore_errors=True)
-        files_after = sum(
-            1
-            for _dir, _sub, names in os.walk(final)
-            for n in names
-            if n.endswith(".parquet")
-        )
-        return {"files_before": files_before, "files_after": files_after}
-
+        _swap_in(final, w.parquet)
+        return {"files_before": len(files), "files_after": len(parquet_files(final))}
 
     def repartition_layout(
         self,
         db: str,
         table: str,
         new_partition_expr,
-        drop_old: bool = True,
     ) -> dict[str, int]:
         """Partition-scheme migration — rewrite the table under a NEW
         partition_value derived from the old one (day → month is the
@@ -448,36 +461,22 @@ class Warehouse:
         patterns). Content is row-identical; only the directory layout
         (and thus which predicates prune) changes.
 
-        Same staging + atomic-swap crash contract as compact(): the
-        table is never observable half-migrated, and a crash before the
-        swap leaves the original untouched (_recover reclaims the
-        staging dir). At 100 TB this is the one legitimate full-table
-        rewrite — a one-off layout migration, not a recurring sink.
+        Published by the module's directory swap, so the table is never
+        observable half-migrated. At 100 TB this is the one legitimate
+        full-table rewrite — a one-off layout migration, not a
+        recurring sink.
 
         `new_partition_expr` is a Column over the old columns producing
         the new partition_value. Returns partition counts before/after.
         """
-        self._recover(db, table)
         final = self.path(db, table)
+        _heal(final)
         df = self.spark.read.parquet(final)
-        parts_before = sum(
-            1 for n in os.listdir(final)
-            if n.startswith("partition_value=") and os.path.isdir(os.path.join(final, n))
-        )
+        parts_before = _count_partitions(final)
         data_cols = [c for c in df.columns if c != "partition_value"]
         out = df.select(*data_cols, new_partition_expr.alias("partition_value"))
-        staging = os.path.join(self.root, db, f"_tmp-{table}-{uuid.uuid4().hex[:8]}")
-        out.write.mode("overwrite").partitionBy("partition_value").parquet(staging)
-        old = final + ".old"
-        os.rename(final, old)
-        os.rename(staging, final)
-        if drop_old:
-            shutil.rmtree(old, ignore_errors=True)
-        parts_after = sum(
-            1 for n in os.listdir(final)
-            if n.startswith("partition_value=") and os.path.isdir(os.path.join(final, n))
-        )
-        return {"parts_before": parts_before, "parts_after": parts_after}
+        _swap_in(final, out.write.mode("overwrite").partitionBy("partition_value").parquet)
+        return {"parts_before": parts_before, "parts_after": _count_partitions(final)}
 
     def vacuum_partitions(self, db: str, table: str, keep_from: str) -> dict[str, int]:
         """Retention VACUUM — the deletion half of warehouse maintenance
@@ -491,9 +490,6 @@ class Warehouse:
         production analog). Returns partition counts for audit logging,
         the number every retention job is asked to report.
         """
-        import datetime
-        import shutil
-
         cutoff = datetime.date.fromisoformat(keep_from)
         root = self.path(db, table)
         dropped = kept = 0
@@ -509,8 +505,57 @@ class Warehouse:
         return {"partitions_dropped": dropped, "partitions_kept": kept}
 
 
+class _ManifestLog:
+    """The commit log SnapshotLog and TransactionLog share: immutable
+    per-commit data dirs root/v0000000N/ and one JSON manifest per
+    commit at root/_log/0000000N.json, published by atomic_write (the
+    manifest write is the commit point)."""
 
-class SnapshotLog:
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self.log_dir = os.path.join(root, "_log")
+        os.makedirs(self.log_dir, exist_ok=True)
+
+    def versions(self) -> list[int]:
+        return sorted(
+            int(n[:-5])
+            for n in os.listdir(self.log_dir)
+            if n.endswith(".json") and not n.startswith(".")
+        )
+
+    def _next_version(self) -> int:
+        existing = self.versions()
+        return (existing[-1] + 1) if existing else 0
+
+    def _resolve(self, version: int | None) -> int:
+        """`version`, or the latest one when None; FileNotFoundError if
+        it was never committed."""
+        existing = self.versions()
+        if not existing:
+            raise FileNotFoundError(f"no commits under {self.root}")
+        if version is None:
+            return existing[-1]
+        if version not in existing:
+            raise FileNotFoundError(f"version {version} not in {existing}")
+        return version
+
+    def _manifest(self, version: int) -> dict:
+        with open(os.path.join(self.log_dir, f"{version:08d}.json")) as f:
+            return json.load(f)
+
+    def _publish(self, manifest: dict) -> int:
+        version = manifest["version"]
+        atomic_write(os.path.join(self.log_dir, f"{version:08d}.json"), json.dumps(manifest))
+        return version
+
+    def _write_files(self, df: DataFrame, data_dir: str) -> list[str]:
+        """Write `df` to `data_dir`; its files relative to the root."""
+        df.write.mode("overwrite").parquet(data_dir)
+        return [os.path.relpath(p, self.root) for p in parquet_files(data_dir)]
+
+
+class SnapshotLog(_ManifestLog):
     """Commit-log table format: snapshot isolation + time travel over
     plain parquet — the Delta/Iceberg transaction-log pattern reduced to
     its load-bearing core, completing the maintenance family (compact =
@@ -523,8 +568,8 @@ class SnapshotLog:
     plus, for append commits, every file carried over from the parent
     version). Readers resolve version → files through the manifest only.
 
-    Commit protocol: write the data dir FIRST, then publish with an
-    atomic same-directory rename of the manifest temp file. A crash
+    Commit protocol: write the data dir FIRST, then publish the
+    manifest with atomic_write (_ManifestLog). A crash
     between the two leaves an orphan data dir no manifest references —
     invisible to every reader, reclaimed by vacuum(). Single-writer by
     design (the reference's publish path is a single Airflow task,
@@ -537,46 +582,6 @@ class SnapshotLog:
     until vacuumed, which is what makes a training run reproducible —
     pin the snapshot id, not "whatever the table held that day".
     """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.log_dir = os.path.join(root, "_log")
-        os.makedirs(self.log_dir, exist_ok=True)
-
-    # -- manifest plumbing ------------------------------------------------
-
-    def versions(self) -> list[int]:
-        return sorted(
-            int(n[:-5])
-            for n in os.listdir(self.log_dir)
-            if n.endswith(".json") and not n.startswith(".")
-        )
-
-    def _manifest(self, version: int) -> dict:
-        import json
-
-        with open(os.path.join(self.log_dir, f"{version:08d}.json")) as f:
-            return json.load(f)
-
-    def _publish(self, manifest: dict) -> int:
-        import json
-
-        version = manifest["version"]
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex[:8]}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, os.path.join(self.log_dir, f"{version:08d}.json"))
-        return version
-
-    @staticmethod
-    def _data_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(dd, n)
-            for dd, _s, names in os.walk(d)
-            for n in names
-            if n.endswith(".parquet")
-        )
 
     def _ref_path(self, abs_file: str) -> str:
         """Manifest entry for an absolute file path: files under this
@@ -602,13 +607,10 @@ class SnapshotLog:
         carried by reference, never rewritten)."""
         if mode not in ("replace", "append"):
             raise ValueError(f"unknown commit mode {mode!r}")
-        existing = self.versions()
-        version = (existing[-1] + 1) if existing else 0
-        data_dir = os.path.join(self.root, f"v{version:08d}")
-        df.write.mode("overwrite").parquet(data_dir)
-        files = [os.path.relpath(p, self.root) for p in self._data_files(data_dir)]
-        if mode == "append" and existing:
-            files = self._manifest(existing[-1])["files"] + files
+        version = self._next_version()
+        files = self._write_files(df, os.path.join(self.root, f"v{version:08d}"))
+        if mode == "append" and version:
+            files = self._manifest(version - 1)["files"] + files
         return self._publish({"version": version, "mode": mode, "files": files})
 
     # -- read path --------------------------------------------------------
@@ -621,13 +623,7 @@ class SnapshotLog:
         ADDED columns (carried parent files keep the old schema on
         disk; a sampled-file schema would randomly lose the new
         columns — same contract as Warehouse.read)."""
-        existing = self.versions()
-        if not existing:
-            raise FileNotFoundError(f"no commits under {self.root}")
-        if version is None:
-            version = existing[-1]
-        if version not in existing:
-            raise FileNotFoundError(f"version {version} not in {existing}")
+        version = self._resolve(version)
         files = self._manifest(version)["files"]
         reader = self.spark.read
         if merge_schema:
@@ -648,13 +644,7 @@ class SnapshotLog:
         about clone references and can orphan the clone's files —
         sever with a deep copy (dest.commit(dest.read())) first.
         """
-        existing = self.versions()
-        if not existing:
-            raise FileNotFoundError(f"no commits under {self.root}")
-        if version is None:
-            version = existing[-1]
-        if version not in existing:
-            raise FileNotFoundError(f"version {version} not in {existing}")
+        version = self._resolve(version)
         dest = SnapshotLog(self.spark, dest_root)
         if dest.versions():
             raise FileExistsError(f"clone target {dest_root} already has commits")
@@ -682,20 +672,14 @@ class SnapshotLog:
         this log can see the branch's writes. The inverse hazard of
         clone() applies: vacuum() on the branch can orphan files this
         log now references — deep-copy (commit(read())) to sever."""
-        existing = branch.versions()
-        if not existing:
-            raise FileNotFoundError(f"no commits under {branch.root}")
-        if version is None:
-            version = existing[-1]
+        version = branch._resolve(version)
         abs_files = [
             self._ref_path(f if os.path.isabs(f) else os.path.join(branch.root, f))
             for f in branch._manifest(version)["files"]
         ]
-        mine = self.versions()
-        next_v = (mine[-1] + 1) if mine else 0
         return self._publish(
             {
-                "version": next_v,
+                "version": self._next_version(),
                 "mode": "fast_forward",
                 "files": abs_files,
                 "source": branch.root,
@@ -736,6 +720,41 @@ class SnapshotLog:
                 shutil.rmtree(os.path.join(self.root, name))
                 dropped_dirs += 1
         return {"manifests_dropped": dropped_manifests, "data_dirs_dropped": dropped_dirs}
+
+
+def _merge_plan(target: DataFrame, delta: DataFrame, keys: list[str]) -> dict:
+    """{partition_value: (keep, new)} for every partition a MERGE of
+    `delta` into `target` touches (Warehouse.merge_write's plan)."""
+    # delta keys are small relative to the target (a micro-batch /
+    # daily increment) — broadcast so the target is never shuffled
+    hits = F.broadcast(delta.select(*keys).distinct().withColumn("_hit", F.lit(True)))
+    from_target = target.join(hits, on=keys, how="left").select(
+        "partition_value",
+        F.col("_hit").isNotNull().alias("hit"),
+        F.col("_hit").isNull().alias("keep"),
+        F.lit(False).alias("new"),
+    )
+    from_delta = delta.select(
+        F.col("partition_value").cast(target.schema["partition_value"].dataType),
+        F.lit(False).alias("hit"),
+        F.lit(False).alias("keep"),
+        F.lit(True).alias("new"),
+    )
+    rows = (
+        from_target.unionByName(from_delta)
+        .groupBy("partition_value")
+        .agg(*[F.max(c).alias(c) for c in ("hit", "keep", "new")])
+        .where("hit OR new")
+        .collect()
+    )
+    return {r["partition_value"]: (r["keep"], r["new"]) for r in rows}
+
+
+def _count_partitions(root: str) -> int:
+    return sum(
+        1 for n in os.listdir(root)
+        if n.startswith("partition_value=") and os.path.isdir(os.path.join(root, n))
+    )
 
 
 def _hive_part(value) -> str:
@@ -779,15 +798,7 @@ def parquet_footer_stats(spark: SparkSession, root: str, stat_col: str) -> DataF
     scan_zorder_skip; this exposes the producing half as a first-class
     maintenance verb.
     """
-    import os as _os
-
-    files = sorted(
-        _os.path.join(d, n)
-        for d, _s, names in _os.walk(root)
-        for n in names
-        if n.endswith(".parquet")
-    )
-    fdf = spark.createDataFrame([(p,) for p in files], "path string")
+    fdf = spark.createDataFrame([(p,) for p in parquet_files(root)], "path string")
 
     def read_footers(batches):
         import pandas as pd
@@ -813,7 +824,7 @@ def parquet_footer_stats(spark: SparkSession, root: str, stat_col: str) -> DataF
     )
 
 
-class TransactionLog:
+class TransactionLog(_ManifestLog):
     """Atomic MULTI-TABLE transactions over plain parquet — the
     consistency primitive single-table logs (Delta, and SnapshotLog
     above) lack: one manifest names the file list of EVERY table in the
@@ -832,9 +843,9 @@ class TransactionLog:
     (same delta-only contract as SnapshotLog append).
 
     Commit protocol (identical crash story to SnapshotLog): write every
-    table's data dir first, then one same-directory manifest rename. A
-    crash before the rename leaves orphan dirs no reader resolves;
-    after it, all tables flip together. Single-writer by design; on an
+    table's data dir first, then one manifest atomic_write. A crash
+    before it leaves orphan dirs no reader resolves; after it, all
+    tables flip together. Single-writer by design; on an
     object store the rename becomes a conditional put — same as Delta.
 
     100 TB posture: commit cost is O(files written this txn) + one
@@ -842,25 +853,6 @@ class TransactionLog:
     stays readable until vacuumed — a training run pins one version id
     and gets a CONSISTENT multi-table snapshot forever.
     """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.log_dir = os.path.join(root, "_log")
-        os.makedirs(self.log_dir, exist_ok=True)
-
-    def versions(self) -> list[int]:
-        return sorted(
-            int(n[:-5])
-            for n in os.listdir(self.log_dir)
-            if n.endswith(".json") and not n.startswith(".")
-        )
-
-    def _manifest(self, version: int) -> dict:
-        import json
-
-        with open(os.path.join(self.log_dir, f"{version:08d}.json")) as f:
-            return json.load(f)
 
     def commit(
         self,
@@ -874,43 +866,25 @@ class TransactionLog:
         keep the parent's files too (the delta-only fact-append path).
         `meta` rides in the manifest — e.g. a streaming batch_id, which
         makes foreachBatch replays detectable (exactly-once sinks)."""
-        existing = self.versions()
-        version = (existing[-1] + 1) if existing else 0
-        carried = self._manifest(existing[-1])["tables"] if existing else {}
+        version = self._next_version()
+        carried = self._manifest(version - 1)["tables"] if version else {}
         files: dict[str, list[str]] = dict(carried)
         for name, df in tables.items():
-            data_dir = os.path.join(self.root, f"v{version:08d}", name)
-            df.write.mode("overwrite").parquet(data_dir)
-            new_files = [
-                os.path.relpath(p, self.root)
-                for p in SnapshotLog._data_files(data_dir)
-            ]
+            new_files = self._write_files(
+                df, os.path.join(self.root, f"v{version:08d}", name)
+            )
             if append and name in append:
                 files[name] = carried.get(name, []) + new_files
             else:
                 files[name] = new_files
-        import json
-
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex[:8]}.json")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"version": version, "tables": files, "meta": meta or {}}, f
-            )
-        os.rename(tmp, os.path.join(self.log_dir, f"{version:08d}.json"))
-        return version
+        return self._publish({"version": version, "tables": files, "meta": meta or {}})
 
     def latest_meta(self) -> dict:
         existing = self.versions()
         return self._manifest(existing[-1]).get("meta", {}) if existing else {}
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
-        existing = self.versions()
-        if not existing:
-            raise FileNotFoundError(f"no commits under {self.root}")
-        if version is None:
-            version = existing[-1]
-        if version not in existing:
-            raise FileNotFoundError(f"version {version} not in {existing}")
+        version = self._resolve(version)
         manifest = self._manifest(version)
         if table not in manifest["tables"]:
             raise FileNotFoundError(f"table {table!r} not in version {version}")
@@ -932,12 +906,9 @@ def input_fingerprint(paths: list[str]) -> str:
             st = os.stat(root)
             entries.append((os.path.basename(root), st.st_size, st.st_mtime_ns))
             continue
-        for d, _s, names in os.walk(root):
-            for n in names:
-                if n.endswith(".parquet"):
-                    p = os.path.join(d, n)
-                    st = os.stat(p)
-                    entries.append((os.path.relpath(p, root), st.st_size, st.st_mtime_ns))
+        for p in parquet_files(root):
+            st = os.stat(p)
+            entries.append((os.path.relpath(p, root), st.st_size, st.st_mtime_ns))
     h = hashlib.sha256()
     for e in sorted(entries):
         h.update(repr(e).encode())
@@ -1012,35 +983,17 @@ class MergeOnReadTable:
     def write(self, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(self.data_dir)
 
-    def _recover(self) -> None:
-        """Heal an apply_deletes crash window (same two-rename swap and
-        rules as Warehouse._recover): data.old alone → restore it;
-        data.old alongside data → post-swap debris → drop it. Without
-        this, a crash between the renames leaves NO data_dir and every
-        read fails until manual repair."""
-        old = self.data_dir + ".old"
-        if not os.path.isdir(old):
-            return
-        if os.path.isdir(self.data_dir):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, self.data_dir)
-
     def delete_keys(self, keys: DataFrame) -> None:
         """O(|keys|) append of an equality-delete file — no data moves."""
         keys.select(F.col(self.key_col)).write.mode("append").parquet(self.del_dir)
 
     def _deletes(self) -> DataFrame | None:
-        if not os.path.isdir(self.del_dir) or not any(
-            n.endswith(".parquet")
-            for _d, _s, names in os.walk(self.del_dir)
-            for n in names
-        ):
+        if not parquet_files(self.del_dir):
             return None
         return self.spark.read.parquet(self.del_dir)
 
     def read(self) -> DataFrame:
-        self._recover()
+        _heal(self.data_dir)
         df = self.spark.read.parquet(self.data_dir)
         dels = self._deletes()
         if dels is None:
@@ -1050,26 +1003,11 @@ class MergeOnReadTable:
     def apply_deletes(self) -> dict[str, int]:
         """Compaction: materialize the anti-join once, swap atomically,
         clear the delete files — subsequent reads are plain scans again.
-        Same staging+rename crash contract as Warehouse.compact."""
-        dels = self._deletes()
-        n_del_files = (
-            sum(
-                1
-                for _d, _s, names in os.walk(self.del_dir)
-                for n in names
-                if n.endswith(".parquet")
-            )
-            if dels is not None
-            else 0
-        )
-        if dels is None:
+        Published by the module's directory swap; every read heals its
+        crash window."""
+        n_del_files = len(parquet_files(self.del_dir))
+        if not n_del_files:
             return {"delete_files_applied": 0}
-        self._recover()
-        staging = os.path.join(self.root, f"_tmp-{uuid.uuid4().hex[:8]}")
-        self.read().write.mode("overwrite").parquet(staging)
-        old = self.data_dir + ".old"
-        os.rename(self.data_dir, old)
-        os.rename(staging, self.data_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        _swap_in(self.data_dir, self.read().write.mode("overwrite").parquet)
         shutil.rmtree(self.del_dir, ignore_errors=True)
         return {"delete_files_applied": n_del_files}

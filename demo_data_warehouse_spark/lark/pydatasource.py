@@ -244,19 +244,63 @@ class _JsonlCommit(WriterCommitMessage):
         self.rows = rows
 
 
+def _jsonl_manifest(path: str) -> dict:
+    """The sink's committed manifest ({"files": []} before any commit)."""
+    import json
+    import os
+
+    manifest = os.path.join(path, "_manifest.json")
+    if not os.path.exists(manifest):
+        return {"files": []}
+    with open(manifest) as fh:
+        return json.load(fh)
+
+
+def _jsonl_publish(path: str, state: dict, messages, batch=None) -> None:
+    """The one jsonl_sink commit: rename the staged files in, write the
+    manifest with io.py's atomic_write (the commit point), sweep every
+    file the manifest does not name (old overwrite generations,
+    speculative-task losers, and files an epoch that crashed between
+    its renames and its manifest write left behind — a replay stages
+    under fresh uuids, so they would otherwise stay forever), then drop
+    .staging. `batch` tags the new entries with a stream epoch."""
+    import json
+    import os
+    import shutil
+
+    from ..io import atomic_write
+
+    for m in messages:
+        if m is None:
+            continue
+        name = os.path.basename(m.staged)
+        os.rename(m.staged, os.path.join(path, name))
+        entry = {"file": name, "rows": m.rows}
+        if batch is not None:
+            entry["batch"] = batch
+        state["files"].append(entry)
+    atomic_write(os.path.join(path, "_manifest.json"), json.dumps(state))
+    live = {e["file"] for e in state["files"]}
+    for f in os.listdir(path):
+        p = os.path.join(path, f)
+        if f not in live and f != "_manifest.json" and os.path.isfile(p):
+            os.remove(p)
+    shutil.rmtree(os.path.join(path, ".staging"), ignore_errors=True)
+
+
 class JsonlSinkWriter(DataSourceWriter):
     """Executor-side writer with a driver-side atomic commit.
 
     Each task streams its partition to <path>/.staging/<uuid>.jsonl and
     returns a commit message; ONLY the driver's commit() makes data
-    visible, by moving staged files in and then swapping the manifest
-    (os.replace — atomic on POSIX). Readers resolve the file list from
-    the manifest, so a crashed/aborted write (staged files deleted in
-    abort(), manifest untouched) is invisible — the same torn-read
-    discipline as io.py's sinks, expressed through the DataSource
-    writer contract (write/commit/abort). Speculative/retried tasks
-    stage under fresh uuids; losers simply go unreferenced and are
-    swept by the staging cleanup in commit().
+    visible, through _jsonl_publish: staged files move in, then the
+    manifest is written by io.py's atomic commit write. Readers resolve
+    the file list from the manifest, so a crashed/aborted write (staged
+    files deleted in abort(), manifest untouched) is invisible — the
+    same torn-read discipline as io.py's sinks, expressed through the
+    DataSource writer contract (write/commit/abort). Speculative/retried
+    tasks stage under fresh uuids; losers simply go unreferenced and are
+    swept by commit().
     """
 
     def __init__(self, path: str, overwrite: bool):
@@ -285,39 +329,14 @@ class JsonlSinkWriter(DataSourceWriter):
 
     # -- driver side --
     def commit(self, messages):
-        import json
-        import os
-        import shutil
-        import uuid
-
-        manifest = os.path.join(self.path, "_manifest.json")
         # An APPEND preserves every manifest key it doesn't own: the
         # streaming writer's exactly-once replay check reads 'batches',
         # and a batch append that rewrote the manifest as {files} would
         # erase that ledger — the next epoch replay would then
         # double-publish its rows (ADVICE r6). An OVERWRITE deliberately
         # resets the whole manifest: truncation invalidates old epochs.
-        state: dict = {"files": []}
-        if not self.overwrite and os.path.exists(manifest):
-            with open(manifest) as fh:
-                state = json.load(fh)
-        entries = state["files"]
-        for m in messages:
-            if m is None:
-                continue
-            final = os.path.join(self.path, os.path.basename(m.staged))
-            os.rename(m.staged, final)
-            entries.append({"file": os.path.basename(final), "rows": m.rows})
-        tmp = manifest + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, manifest)  # the commit point
-        live = {e["file"] for e in entries}
-        for f in os.listdir(self.path):  # sweep orphans (old overwrite gens,
-            p = os.path.join(self.path, f)  # speculative-task losers)
-            if f not in live and f != "_manifest.json" and os.path.isfile(p):
-                os.remove(p)
-        shutil.rmtree(os.path.join(self.path, ".staging"), ignore_errors=True)
+        state = {"files": []} if self.overwrite else _jsonl_manifest(self.path)
+        _jsonl_publish(self.path, state, messages)
 
     def abort(self, messages):
         # sweep ALL of staging, not just the messaged files: the task
@@ -375,8 +394,9 @@ class JsonlStreamSinkWriter:
     by batchId in the manifest — Structured Streaming replays a failed
     epoch with the SAME batchId, and a batch already in the manifest
     commits as a no-op (staged files swept), which is exactly-once
-    visibility over an at-least-once execution. Same staging + manifest
-    os.replace discipline as the batch writer."""
+    visibility over an at-least-once execution. Same commit step
+    (_jsonl_publish) as the batch writer; only the 'batches' ledger
+    differs."""
 
     def __init__(self, path: str):
         self.path = path
@@ -386,46 +406,18 @@ class JsonlStreamSinkWriter:
         return self._batch.write(iterator)
 
     def commit(self, messages, batchId):
-        import json
         import os
         import shutil
-        import uuid
 
-        manifest = os.path.join(self.path, "_manifest.json")
-        state = {"files": [], "batches": []}
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                state = json.load(fh)
-                state.setdefault("batches", [])
+        state = _jsonl_manifest(self.path)
+        state.setdefault("batches", [])
         if batchId in state["batches"]:
             # replayed epoch: already visible, publishing again would
             # double rows — sweep the replay's staged output instead
             shutil.rmtree(os.path.join(self.path, ".staging"), ignore_errors=True)
             return
-        for m in messages:
-            if m is None:
-                continue
-            final = os.path.join(self.path, os.path.basename(m.staged))
-            os.rename(m.staged, final)
-            state["files"].append(
-                {"file": os.path.basename(final), "rows": m.rows, "batch": batchId}
-            )
         state["batches"].append(batchId)
-        tmp = manifest + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, manifest)
-        # sweep crash debris (same rule as the batch writer): an epoch
-        # that crashed between the file renames and the manifest swap is
-        # replayed with FRESH task uuids, so its renamed-but-unpublished
-        # files stay on disk forever otherwise — invisible to readers
-        # (manifest-resolved), but unbounded garbage on a long stream
-        live = {e["file"] for e in state["files"]}
-        for f in os.listdir(self.path):
-            p = os.path.join(self.path, f)
-            if f not in live and f != "_manifest.json" and os.path.isfile(p):
-                os.remove(p)
-        shutil.rmtree(os.path.join(self.path, ".staging"), ignore_errors=True)
+        _jsonl_publish(self.path, state, messages, batch=batchId)
 
     def abort(self, messages, batchId):
         import os

@@ -28,6 +28,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import atomic_write
+
 DT_FMT = "%Y-%m-%d %H:%M:%S"
 
 
@@ -67,10 +69,7 @@ class StateDoc:
         return {}
 
     def save(self, state: dict[str, dict[str, Any]]) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        atomic_write(self.path, json.dumps(state, indent=1, sort_keys=True))
 
 
 def _utcnow() -> datetime:

@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import atomic_write, parquet_files
+
 K_HASHES = 7
 M_BITS = 1 << 15  # floor; build sizes the array up from measured file rows
 BITS_PER_KEY = 10  # m/n ≈ 10 with k=7 → ~1% false-positive rate
@@ -90,12 +92,10 @@ def _sized_m_bits(data_root: str) -> int:
     file size, not the table."""
     import pyarrow.parquet as pq
 
-    max_rows = 0
-    for root, _, files in os.walk(data_root):
-        for f in files:
-            if f.endswith(".parquet"):
-                nr = pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                max_rows = max(max_rows, nr)
+    max_rows = max(
+        (pq.ParquetFile(p).metadata.num_rows for p in parquet_files(data_root)),
+        default=0,
+    )
     m = M_BITS
     while m < BITS_PER_KEY * max_rows:
         m <<= 1
@@ -164,16 +164,14 @@ def build_bloom_index(
         .distinct()
     )
     idx.write.mode("overwrite").parquet(index_root)
-    # tmp + os.replace: the sidecar is REQUIRED by every probe, so a
-    # crash mid-write must leave either the old sidecar or the new one,
-    # never a truncated file that turns the designed rebuild-me error
-    # into a JSONDecodeError (same commit discipline as the jsonl-sink
-    # manifests).
-    meta_path = os.path.join(index_root, _META_NAME)
-    tmp_path = meta_path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        json.dump({"m_bits": m_bits, "k": K_HASHES, "hash": HASH_SCHEME}, fh)
-    os.replace(tmp_path, meta_path)
+    # atomic_write: the sidecar is REQUIRED by every probe, so a crash
+    # mid-write must leave either the old sidecar or the new one, never
+    # a truncated file that turns the designed rebuild-me error into a
+    # JSONDecodeError.
+    atomic_write(
+        os.path.join(index_root, _META_NAME),
+        json.dumps({"m_bits": m_bits, "k": K_HASHES, "hash": HASH_SCHEME}),
+    )
 
 
 def bloom_candidate_files(
@@ -232,10 +230,7 @@ def bloom_point_lookup(
     files_total). The data-side equality filter re-checks, so bloom
     false positives cost IO only, never correctness."""
     files = bloom_candidate_files(spark, index_root, value)
-    total = sum(
-        len([f for f in fs if f.endswith(".parquet")])
-        for _, _, fs in os.walk(data_root)
-    )
+    total = len(parquet_files(data_root))
     if not files:
         empty = spark.read.parquet(data_root).where(F.lit(False))
         return empty, 0, total

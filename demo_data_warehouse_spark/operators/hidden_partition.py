@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import atomic_write
 from .dedup import hash60_sql
 
 _OPS = {
@@ -68,8 +69,7 @@ class HiddenPartitionTable:
         else:
             self.spec = list(spec)
             os.makedirs(root, exist_ok=True)
-            with open(spec_file, "w") as fh:
-                json.dump(self.spec, fh)
+            atomic_write(spec_file, json.dumps(self.spec))
 
     @staticmethod
     def _pcol(t: dict) -> str:

@@ -31,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import atomic_write
 from .incremental import merge_partials, rollup_partials
 
 # aggregates derivable from the (n_rows, sum_c, min_c, max_c) state
@@ -52,13 +53,12 @@ class MaterializedView:
     """An aggregate MV over one measure column, stored as partial state.
 
     path layout: versioned state dirs <root>/state-v0000N plus a
-    <root>/_current pointer file swapped with os.replace — the same
-    pointer-swap discipline as io.py's jsonl sink. Readers resolve the
-    pointer to a COMPLETE directory at every point in time; a crash
-    mid-publish leaves the previous version live (the orphan staging /
-    superseded dirs are reclaimed on the next publish). A single
-    state/ + rename-away scheme would expose a no-state window between
-    the two renames.
+    <root>/_current pointer file replaced by io.py's atomic_write.
+    Readers resolve the pointer to a COMPLETE directory at every point
+    in time; a crash mid-publish leaves the previous version live (the
+    orphan staging / superseded dirs are reclaimed on the next
+    publish). A single state/ + rename-away scheme would expose a
+    no-state window between the two renames.
     """
 
     def __init__(
@@ -110,10 +110,7 @@ class MaterializedView:
         os.rename(staging, os.path.join(self.root, name))
         # atomic pointer swap: readers see the old complete state until
         # this instant, the new complete state after — never neither
-        tmp = os.path.join(self.root, f".ptr-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(name)
-        os.replace(tmp, self._pointer)
+        atomic_write(self._pointer, name)
         # reclaim old versions and crash-orphaned staging dirs, but KEEP
         # the immediately-previous version: an in-flight reader that
         # resolved the pointer just before the swap may still be
@@ -122,7 +119,7 @@ class MaterializedView:
         keep = {name, pointed if pointed is not None else name}
         for n in os.listdir(self.root):
             if (n.startswith("state-v") and n not in keep) or n.startswith(
-                (".staging-", ".ptr-")
+                (".staging-", ".tmp-")
             ):
                 p = os.path.join(self.root, n)
                 if os.path.isdir(p):

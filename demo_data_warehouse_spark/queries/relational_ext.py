@@ -4480,8 +4480,7 @@ def scan_bloom_index(spark, sf_dir):
     real), and the final rows hash against the plain IN-list oracle (no
     false negatives — bloom misses would drop rows and fail the
     gate)."""
-    import os
-
+    from ..io import parquet_files
     from ..operators.bloom_index import bloom_candidate_files_multi, build_bloom_index
     from ..streaming.pipeline import scratch_dir
 
@@ -4501,9 +4500,7 @@ def scan_bloom_index(spark, sf_dir):
     # multi-key lookup batch at 100 TB — 1 probe job instead of 3
     keys = [17, 971, 3003]
     cand = bloom_candidate_files_multi(spark, idx, keys)
-    n_total = sum(
-        len([f for f in fs if f.endswith(".parquet")]) for _, _, fs in os.walk(data)
-    )
+    n_total = len(parquet_files(data))
     for eid, files in cand.items():
         assert len(files) < n_total, (eid, len(files), n_total)  # pruning is real
     # ONE data scan over the UNION of candidate files with the IN-list

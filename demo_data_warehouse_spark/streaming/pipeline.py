@@ -40,7 +40,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import Warehouse
+from ..io import Warehouse, _heal, _swap_in
 
 
 def read_landing_stream(
@@ -133,15 +133,14 @@ def rollup_merge_sink(
     state: the id rides inside the swapped state directory (an
     underscore-prefixed marker file Spark readers ignore), so a batch
     is skipped iff its effect is already in the state, no matter where
-    a crash landed. Swap is staging + two renames; Warehouse._recover
-    heals the half-swapped window.
+    a crash landed. The state is published by io.py's directory swap,
+    and its crash rule is applied before the marker is read.
     """
     from ..operators.incremental import merge_partials, rollup_partials
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        import shutil
-
         state_dir = warehouse.path(db, table)
+        _heal(state_dir)
         marker = os.path.join(state_dir, "_applied_batch")
         if os.path.exists(marker):
             with open(marker) as fh:
@@ -152,17 +151,15 @@ def rollup_merge_sink(
             merged = merge_partials(warehouse.read(db, table), parts, keys)
         else:
             merged = parts
-        staging = os.path.join(warehouse.root, db, f"_tmp-{table}-{uuid.uuid4().hex[:8]}")
-        # executing the write materializes `merged` (reading the OLD
-        # state) before any rename touches the directory
-        merged.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, "_applied_batch"), "w") as fh:
-            fh.write(str(batch_id))
-        old = state_dir + ".old"
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(staging, state_dir)
-        shutil.rmtree(old, ignore_errors=True)
+
+        def write_state(staging: str) -> None:
+            # executing the write materializes `merged` (reading the OLD
+            # state) before any rename touches the directory
+            merged.write.mode("overwrite").parquet(staging)
+            with open(os.path.join(staging, "_applied_batch"), "w") as fh:
+                fh.write(str(batch_id))
+
+        _swap_in(state_dir, write_state)
 
     return sink
 

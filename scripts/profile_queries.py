@@ -28,38 +28,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 EVENT_DIR = "/tmp/ddw-profile-events"
 
 
-def build_session():
-    from pyspark.sql import SparkSession
-
-    from demo_data_warehouse_spark.session import _RUNTIME_CONFS
-
+def _enable_event_log() -> None:
+    """Event-log confs for the JVM get_spark launches, passed the way
+    perfbench/run.py passes them (get_spark takes no extra confs)."""
     os.makedirs(EVENT_DIR, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    b = (
-        SparkSession.builder.appName("ddw-profile")
-        .master(master)
-        .config("spark.sql.shuffle.partitions", os.environ.get("DDW_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.driver.memory", os.environ.get("DDW_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{EVENT_DIR}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in _RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{EVENT_DIR}",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {k}={v}" for k, v in confs.items()
+    ) + " pyspark-shell"
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
     from bench import HEADLINE, HEADLINE_T2
+    from demo_data_warehouse_spark.session import get_spark
 
     names = sys.argv[1:] or (HEADLINE + HEADLINE_T2)
     qs = entry_mod.queries()
-    spark = build_session()
+    _enable_event_log()
+    spark = get_spark("ddw-profile")
     sc = spark.sparkContext
 
     def run(n):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from demo_data_warehouse_spark.catalog import table
@@ -149,6 +150,18 @@ def test_spec_reloads_from_metadata(spark, sf_dir):
     assert _ids(reopened.scan([("user_id", "=", 3)])) == _ids(
         t.scan([("user_id", "=", 3)])
     )
+
+
+def test_spec_write_failure_keeps_previous_spec(spark):
+    """A spec write that fails part-way (here: a value json cannot
+    encode) must leave the previous spec readable, not a truncated
+    file that makes the next open raise JSONDecodeError."""
+    root = scratch_dir("hp_spec_t")
+    spec = [{"kind": "bucket", "col": "user_id", "n": 4}]
+    HiddenPartitionTable(spark, root, spec)
+    with pytest.raises(TypeError):
+        HiddenPartitionTable(spark, root, spec + [{"kind": "days", "col": object()}])
+    assert HiddenPartitionTable(spark, root).spec == spec
 
 
 def test_fast_forward_is_metadata_only(spark):

@@ -8,9 +8,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from demo_data_warehouse_spark.io import Warehouse
+from demo_data_warehouse_spark.streaming.pipeline import rollup_merge_sink
 
 
 def _part_files(root: str, db: str, table: str) -> dict[str, dict[str, tuple]]:
@@ -88,24 +90,31 @@ def test_merge_key_moving_partition_touches_both(spark, tmp_path):
 
 def test_merge_fully_drained_partition_removed(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
-    rows = [(i, "a", dt.date(2024, 1, 1)) for i in range(3)] + [
-        (100 + i, "b", dt.date(2024, 1, 2)) for i in range(3)
-    ]
-    wh.merge_write(
-        spark.createDataFrame(rows, ["pk", "v", "partition_value"]),
-        "silver", "t2", ["pk"], "2024-01-01",
+    schema = "pk bigint, v string, partition_value date"
+    rows = (
+        [(i, "a", dt.date(2024, 1, 1)) for i in range(3)]
+        + [(100 + i, "b", dt.date(2024, 1, 2)) for i in range(3)]
+        + [(200 + i, "n", None) for i in range(2)]  # the NULL partition
     )
-    # delta pulls ALL of 2024-01-01's keys into 2024-01-02
+    wh.merge_write(
+        spark.createDataFrame(rows, schema), "silver", "t2", ["pk"], "2024-01-01"
+    )
+    assert "partition_value=__HIVE_DEFAULT_PARTITION__" in _part_files(
+        str(tmp_path), "silver", "t2"
+    )
+    # delta pulls ALL of 2024-01-01's keys and the NULL partition's
+    # keys into 2024-01-02
     delta = spark.createDataFrame(
-        [(i, "A", dt.date(2024, 1, 2)) for i in range(3)],
-        ["pk", "v", "partition_value"],
+        [(i, "A", dt.date(2024, 1, 2)) for i in (0, 1, 2, 200, 201)], schema
     )
     wh.merge_write(delta, "silver", "t2", ["pk"], "2024-01-02")
     parts = _part_files(str(tmp_path), "silver", "t2")
     assert "partition_value=2024-01-01" not in parts
+    assert "partition_value=__HIVE_DEFAULT_PARTITION__" not in parts
     got = wh.read("silver", "t2")
-    assert got.count() == 6
+    assert got.count() == 8
     assert got.where("partition_value = '2024-01-01'").count() == 0
+    assert got.where("partition_value IS NULL").count() == 0
 
 
 def test_merge_replay_idempotent_on_disk(spark, tmp_path):
@@ -119,30 +128,88 @@ def test_merge_replay_idempotent_on_disk(spark, tmp_path):
     wh.merge_write(delta, "silver", "t", ["pk"], "2024-01-06")
     rows2 = {tuple(r) for r in wh.read("silver", "t").select("pk", "v").collect()}
     assert rows1 == rows2
+    # an empty delta (the shape of a replayed SCD2 tick) touches no
+    # partition: not even the one it names is rewritten
+    before = _part_files(str(tmp_path), "silver", "t")
+    empty = spark.createDataFrame([], "pk bigint, v string")
+    wh.merge_write(empty, "silver", "t", ["pk"], "2024-01-06")
+    assert _part_files(str(tmp_path), "silver", "t") == before
 
 
-def test_swap_crash_recovery_restores_old(spark, tmp_path):
-    """Crash window between the two compact renames: only .old remains.
-    read() must restore it, not bootstrap an empty table."""
-    wh = Warehouse(spark, str(tmp_path))
+# Every user of io.py's directory swap, as (table dir, next step). The
+# next step is what the user does after a crash: read the table, run the
+# migration again, or replay the last stream batch (which must stay
+# skipped). It returns what the user observes.
+
+
+def _merged_table(spark, wh):
     df = spark.createDataFrame([(1, "a")], ["pk", "v"])
     wh.merge_write(df.withColumn("partition_value", F.lit("2024-01-01").cast("date")),
                    "silver", "t3", ["pk"], "2024-01-01")
-    final = wh.path("silver", "t3")
+
+    def read():
+        # with a schema, an unhealed table would read as an empty bootstrap
+        return sorted(wh.read("silver", "t3", schema=df.schema).select("pk", "v").collect())
+
+    return wh.path("silver", "t3"), read
+
+
+def _repartitioned_table(spark, wh):
+    df = spark.createDataFrame(
+        [(1, "a", dt.date(2024, 1, 1)), (2, "b", dt.date(2024, 1, 2))],
+        "pk bigint, v string, partition_value date",
+    )
+    wh.write_partition_replace(df, "silver", "t5", "2024-01-01")
+
+    def migrate():
+        stats = wh.repartition_layout(
+            "silver", "t5", F.trunc("partition_value", "month")
+        )
+        rows = sorted(wh.read("silver", "t5").select("pk", "v").collect())
+        return stats["parts_before"], rows
+
+    migrate()
+    return wh.path("silver", "t5"), migrate
+
+
+def _rollup_state(spark, wh):
+    sink = rollup_merge_sink(wh, "gold", "rollup", ["g"], "v")
+    sink(spark.createDataFrame([("a", 1.0), ("b", 4.0)], ["g", "v"]), 0)
+    batch = spark.createDataFrame([("a", 2.5), ("c", 3.0)], ["g", "v"])
+    sink(batch, 1)
+
+    def replay():
+        sink(batch, 1)  # already applied: must not double-count
+        return sorted(wh.read("gold", "rollup").collect())
+
+    return wh.path("gold", "rollup"), replay
+
+
+SWAP_USERS = pytest.mark.parametrize(
+    "user",
+    [_merged_table, _repartitioned_table, _rollup_state],
+    ids=["table", "repartition_layout", "rollup_merge_sink"],
+)
+
+
+@SWAP_USERS
+def test_swap_crash_recovery_restores_old(spark, tmp_path, user):
+    """Crash window between the two swap renames: only .old remains.
+    The next step must restore it, not bootstrap an empty table or
+    re-apply a committed batch."""
+    final, next_step = user(spark, Warehouse(spark, str(tmp_path)))
+    want = next_step()
     os.rename(final, final + ".old")  # simulate crash after rename #1
-    got = wh.read("silver", "t3", schema=df.schema)
-    assert got.count() == 1  # restored, not an empty bootstrap
+    assert next_step() == want
     assert os.path.isdir(final) and not os.path.isdir(final + ".old")
 
 
-def test_swap_debris_cleaned_when_final_present(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
-    df = spark.createDataFrame([(1, "a")], ["pk", "v"])
-    wh.merge_write(df.withColumn("partition_value", F.lit("2024-01-01").cast("date")),
-                   "silver", "t4", ["pk"], "2024-01-01")
-    final = wh.path("silver", "t4")
+@SWAP_USERS
+def test_swap_debris_cleaned_when_final_present(spark, tmp_path, user):
+    final, next_step = user(spark, Warehouse(spark, str(tmp_path)))
+    want = next_step()
     os.makedirs(final + ".old")  # simulate crash after swap, before cleanup
-    assert wh.read("silver", "t4").count() == 1
+    assert next_step() == want
     assert not os.path.isdir(final + ".old")
 
 

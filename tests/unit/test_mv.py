@@ -81,7 +81,7 @@ def test_mv_publish_never_leaves_no_state_window(spark, sf_dir):
     second = mv.state_path
     assert second != first
     assert os.path.isdir(second) and mv.state().count() > 0
-    leftovers = [n for n in os.listdir(root) if n.startswith((".staging-", ".ptr-"))]
+    leftovers = [n for n in os.listdir(root) if n.startswith((".staging-", ".tmp-"))]
     assert leftovers == []
     # retention: current + immediately-previous version are kept (an
     # in-flight reader may still be scanning the previous one); older

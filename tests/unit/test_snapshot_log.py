@@ -14,7 +14,7 @@ import shutil
 
 import pytest
 
-from demo_data_warehouse_spark.io import SnapshotLog
+from demo_data_warehouse_spark.io import SnapshotLog, parquet_files
 from demo_data_warehouse_spark.streaming.pipeline import scratch_dir
 
 
@@ -114,7 +114,7 @@ def test_shallow_clone_is_isolated_and_zero_copy(spark, log):
     try:
         dup = log.clone(dst_root)
         # zero-copy: no parquet written under the clone root
-        assert SnapshotLog._data_files(dst_root) == []
+        assert parquet_files(dst_root) == []
         assert sorted(r.k for r in dup.read().collect()) == list(range(5))
         # independent evolution in both directions
         dup.commit(_df(spark, 10, 12), mode="append")
